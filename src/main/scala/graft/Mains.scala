@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 private object MainUtil {
   def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -24,20 +25,43 @@ private object MainUtil {
   * `src/main.rs:38-165`): `runMain graft.Chilon <outDir> <file...>`.
   */
 object Chilon {
+  val Usage =
+    "usage: Chilon [--ignore-unknown] [--no-infer-ns] [--min-occurs N] <outDir> <rdf-file...>"
+
+  /** Parses the command line (flags mirror the reference CLI,
+    * `src/args.rs:11-30`) into the pipeline config and the RDF inputs.
+    * `--min-occurs` takes its value as the next argument or after `=`.
+    * Left holds the reason and the usage line.
+    */
+  def parseArgs(args: Seq[String]): Either[String, (Pipeline.Config, Seq[String])] = {
+    def minOccurs(v: String) =
+      v.toIntOption.toRight(s"--min-occurs expects an integer, got '$v'")
+    def loop(rest: List[String], cfg: Pipeline.Config, pos: Vector[String])
+        : Either[String, (Pipeline.Config, Vector[String])] = rest match {
+      case Nil => Right((cfg, pos))
+      case "--ignore-unknown" :: t => loop(t, cfg.copy(ignoreUnknown = true), pos)
+      case "--no-infer-ns" :: t => loop(t, cfg.copy(inferNs = false), pos)
+      case "--min-occurs" :: t => minOccurs(t.headOption.getOrElse(""))
+        .flatMap(n => loop(t.drop(1), cfg.copy(minOccurs = n), pos))
+      case f :: t if f.startsWith("--min-occurs=") => minOccurs(f.stripPrefix("--min-occurs="))
+        .flatMap(n => loop(t, cfg.copy(minOccurs = n), pos))
+      case f :: _ if f.startsWith("--") => Left(s"unknown flag: $f")
+      case p :: t => loop(t, cfg, pos :+ p)
+    }
+    loop(args.toList, Pipeline.Config(outDir = ""), Vector.empty) match {
+      case Right((cfg, pos)) if pos.length >= 2 => Right((cfg.copy(outDir = pos.head), pos.tail))
+      case Right(_) => Left(s"expected <outDir> and at least one RDF file\n$Usage")
+      case Left(e) => Left(s"$e\n$Usage")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    // flags mirror the reference CLI (src/args.rs:11-30)
-    val (flags, positional) = args.partition(_.startsWith("--"))
-    require(positional.length >= 2,
-      "usage: Chilon [--ignore-unknown] [--no-infer-ns] [--min-occurs N] <outDir> <rdf-file...>")
-    val minOccurs = flags.find(_.startsWith("--min-occurs="))
-      .map(_.split('=')(1).toInt).getOrElse(10)
+    val (cfg, inputs) = parseArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(err) => System.err.println(err); sys.exit(2)
+    }
     val spark = MainUtil.session("graft-chilon")
-    val res = RdfPipeline.run(spark, positional.drop(1).toSeq,
-      Pipeline.Config(
-        outDir = positional(0),
-        ignoreUnknown = flags.contains("--ignore-unknown"),
-        inferNs = !flags.contains("--no-infer-ns"),
-        minOccurs = minOccurs))
+    val res = RdfPipeline.run(spark, inputs, cfg)
     println(s"summary rows: ${res.summary.count()}; registry: ${res.registry.size} namespaces")
     spark.stop()
   }

@@ -79,14 +79,6 @@ object Inference {
 
   final case class PrefixCount(prefix: String, depth: Int, count: Long)
 
-  /** Distributed hierarchical prefix counting (replaces IriTrie build, SURVEY A2).
-    *
-    * @param iris DataFrame with a string column `iri`, one row per occurrence.
-    * @param salt >0 adds a two-phase salted aggregation for skewed prefixes
-    *             (hot dbpedia/schema.org-style domains); partial aggregation
-    *             already absorbs most of it, the salt is an explicit knob.
-    * @return DataFrame(prefix, depth, count) — one row per distinct segment prefix.
-    */
   /** (pos, prefix) explosion through the native [[SegPrefixesGen]] generator
     * (byte-walking, allocation-light); `posexplode(udf)` kept as the
     * cross-checked reference path (parity property test in InferenceSpec).
@@ -102,6 +94,14 @@ object Inference {
       iris.select(F.posexplode(segUdf(F.col("iri"))).as(Seq("pos", "prefix")))
     }
 
+  /** Distributed hierarchical prefix counting (replaces IriTrie build, SURVEY A2).
+    *
+    * @param iris DataFrame with a string column `iri`, one row per occurrence.
+    * @param salt >0 adds a two-phase salted aggregation for skewed prefixes
+    *             (hot dbpedia/schema.org-style domains); partial aggregation
+    *             already absorbs most of it, and the pipeline runs unsalted.
+    * @return DataFrame(prefix, depth, count) — one row per distinct segment prefix.
+    */
   def prefixCounts(iris: DataFrame, salt: Int = 0): DataFrame = {
     val exploded = segExplode(iris)
       .select(F.col("prefix"), (F.col("pos") + 1).as("depth"))
@@ -154,8 +154,8 @@ object Inference {
     * `infer_namespaces` + `infer_namespaces_aux`, `src/seg_tree.rs:66-155`).
     *
     * Candidates start as domain-level prefixes with count >= minNsSize. While
-    * fewer than maxNs expansions have happened, the smallest candidate whose
-    * suitable (>= minNsSize) children all fit in the maxNs budget is replaced by
+    * fewer than [[MaxNs]] expansions have happened, the smallest candidate whose
+    * suitable (>= minNsSize) children all fit in the MaxNs budget is replaced by
     * those children.
     *
     * Intentional divergences from the reference, tolerated by the P/R gate:
@@ -175,8 +175,7 @@ object Inference {
   def inferNamespaces(
       counts: Seq[PrefixCount],
       minNsSize: Long = MinNsSize,
-      minDomainOccurs: Long = MinDomainOccurs,
-      maxNs: Int = MaxNs
+      minDomainOccurs: Long = MinDomainOccurs
   ): (Seq[(String, Long, NsSource)], Seq[String]) = {
     val garbage = counts.filter(c => c.depth == 1 && c.count < minDomainOccurs).map(_.prefix)
 
@@ -205,13 +204,13 @@ object Inference {
 
     var expanded = 0
     var added = true
-    while (added && expanded < maxNs) {
+    while (added && expanded < MaxNs) {
       added = false
       // smallest candidate whose suitable children fit in the budget
       h.iterator
         .find { c =>
           val sc = c.suitableChildren
-          sc.nonEmpty && sc.size + h.size <= maxNs
+          sc.nonEmpty && sc.size + h.size <= MaxNs
         }
         .foreach { parent =>
           h -= parent
@@ -227,9 +226,6 @@ object Inference {
     (h.toSeq.map(c => (c.prefix, c.size, NsSource.Inference: NsSource)), garbage)
   }
 
-  /** Full distributed inference round: count, threshold, collect, expand.
-    * Returns (inferred namespaces, #garbage domains, #distinct prefixes kept).
-    */
   /** O6 diagnostic (reference logs example unresolved IRIs,
     * `src/iri_trie.rs:232-236`): a bounded sample of the still-unresolved set,
     * recorded into tasks.json so an operator can see WHAT is not resolving.
@@ -237,20 +233,8 @@ object Inference {
   def sampleUnresolved(iris: DataFrame, n: Int = 10): Seq[String] =
     iris.limit(n).collect().map(_.getString(0)).toSeq
 
-  def inferFromIris(
-      iris: DataFrame,
-      salt: Int = 0,
-      minNsSize: Long = MinNsSize,
-      minDomainOccurs: Long = MinDomainOccurs,
-      maxNs: Int = MaxNs,
-      countGarbage: Boolean = false
-  ): (Seq[(String, Long, NsSource)], Long) = {
-    val (inferred, nGarbage, _) =
-      inferFromIrisWithCandidates(iris, salt, minNsSize, minDomainOccurs, maxNs, countGarbage)
-    (inferred, nGarbage)
-  }
-
-  /** Like [[inferFromIris]] but also returns the collected above-threshold
+  /** Full distributed inference round: count, threshold, collect, expand.
+    * Returns the inferred namespaces and the collected above-threshold
     * candidate prefixes, enabling the caller's FIXED-POINT EARLY EXIT (see
     * [[roundsExhausted]]): when every candidate resolves against the updated
     * registry, the next round cannot add anything — skipping it saves a full
@@ -258,30 +242,21 @@ object Inference {
     */
   def inferFromIrisWithCandidates(
       iris: DataFrame,
-      salt: Int = 0,
       minNsSize: Long = MinNsSize,
       minDomainOccurs: Long = MinDomainOccurs,
-      maxNs: Int = MaxNs,
-      countGarbage: Boolean = false,
       maxCollected: Int = MaxCollected
-  ): (Seq[(String, Long, NsSource)], Long, Seq[PrefixCount]) = {
-    val pc = prefixCounts(iris, salt)
+  ): (Seq[(String, Long, NsSource)], Seq[PrefixCount]) = {
     // collect only what expansion can ever read: prefixes at/above the
-    // candidate threshold. GC bookkeeping (domains below minDomainOccurs) is
-    // a diagnostic count — one extra full pass — off by default.
-    val rows = pc
+    // candidate threshold
+    val rows = prefixCounts(iris)
       .filter(F.col("count") >= minNsSize)
       .orderBy(F.col("count").desc, F.col("prefix"))
       .limit(maxCollected)
       .collect()
       .map(r => PrefixCount(r.getString(0), r.getInt(1), r.getLong(2)))
       .toSeq
-    val nGarbage =
-      if (countGarbage)
-        pc.filter(F.col("depth") === 1 && F.col("count") < minDomainOccurs).count()
-      else 0L
-    val (inferred, _) = inferNamespaces(rows, minNsSize, minDomainOccurs, maxNs)
-    (inferred, nGarbage, rows)
+    val (inferred, _) = inferNamespaces(rows, minNsSize, minDomainOccurs)
+    (inferred, rows)
   }
 
   /** Sound fixed-point test for the inference round loop. A prefix can only

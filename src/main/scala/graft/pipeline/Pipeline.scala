@@ -6,6 +6,7 @@ import graft.ns.{Inference, NsSource, Registry}
 import graft.sinks.{Snapshot, TtlSink, VisJson}
 import graft.summarize.Normalize
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.storage.StorageLevel
 import java.nio.file.Paths
 
 /** End-to-end KG-construction + namespace-summarization pipeline
@@ -15,7 +16,7 @@ import java.nio.file.Paths
   *   Stage A  pages -> triples (flatMap generator: extractText check, mentions,
   *            entity linking, OpenIE, canonicalization) — checkpointed snapshot
   *   Stage B  namespace inference rounds over still-unresolved IRIs
-  *            (salted prefix aggregation -> driver expansion -> registry)
+  *            (prefix aggregation -> driver expansion -> registry)
   *   Stage C  normalization + summary group-count
   *   Stage D  sinks: output.ttl, all-prefixes.json, vis-data.json, tasks.json,
   *            summary Parquet snapshot
@@ -27,43 +28,42 @@ import java.nio.file.Paths
   */
 object Pipeline {
 
+  /** Pipeline settings. The inference thresholds default to the reference's
+    * (`Inference.MinNsSize`, `Inference.MinDomainOccurs`); the per-round
+    * expansion budget is the fixed `Inference.MaxNs`. `resume` checkpoints
+    * the extracted triples as a parquet snapshot that inference and Stage C
+    * re-read; without it the triple table is persisted in memory instead.
+    */
   final case class Config(
       outDir: String,
       minOccurs: Int = 10,
       inferNs: Boolean = true,
       ignoreUnknown: Boolean = false,
-      // expansion adds <= maxNs namespaces per round, so rich corpora need
-      // several rounds to converge; the fixed-point early exit makes unused
-      // rounds free (a converged corpus stops after round 1 regardless)
+      // expansion adds <= Inference.MaxNs namespaces per round, so rich
+      // corpora need several rounds to converge; the fixed-point early exit
+      // makes unused rounds free (a converged corpus stops after round 1)
       maxInferenceRounds: Int = 4,
-      salt: Int = 0,
       minNsSize: Long = Inference.MinNsSize,
       minDomainOccurs: Long = Inference.MinDomainOccurs,
-      maxNs: Int = Inference.MaxNs,
       // driver-side candidate collect budget per round; corpora with more
       // above-threshold prefixes than this converge over multiple rounds
       // (rounds 3+ are delta-filtered, never a corpus rescan)
       maxCollected: Int = Inference.MaxCollected,
-      resume: Boolean = true,
-      countGarbage: Boolean = false,
-      // None = auto: persist the triple table only when NO parquet snapshot
-      // backs it. With a snapshot, re-reading the columnar snapshot per
-      // inference round (5 narrow columns, pruned scan) beats keeping a
-      // second corpus-sized MEMORY_AND_DISK copy on executor disks — at
-      // 100 TB the double-materialization IS the scale bug. Some(true/false)
-      // forces either behavior.
-      cacheTriples: Option[Boolean] = None
+      resume: Boolean = true
   )
 
   final case class StageMetrics(name: String, rows: Long, wallMs: Long)
 
+  private[graft] type MetricsBuilder =
+    scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
+
   /** Inference housekeeping roll-up (reference `InferHK`,
     * `src/meta_info.rs:104-141`): rounds run, total wall, namespaces the
-    * expansion proposed vs actually added, and (when
-    * `Config.countGarbage`) domains GC'd for low frequency.
+    * expansion proposed vs actually added, and example IRIs still unresolved
+    * after the last round.
     */
   final case class InferHk(
-      rounds: Int, wallMs: Long, inferredNs: Long, addedNs: Long, discardedNs: Long,
+      rounds: Int, wallMs: Long, inferredNs: Long, addedNs: Long,
       exampleUnresolved: Seq[String] = Nil)
 
   /** Per-input-file record (reference `Task`, `src/meta_info.rs:31-46`):
@@ -122,8 +122,10 @@ object Pipeline {
       }
   }
 
-  def run(spark: SparkSession, pages: Dataset[Page], cfg: Config): Result =
-    runExtracting(spark, cfg, () => extractTriples(pages).toDF())
+  def run(spark: SparkSession, pages: Dataset[Page], cfg: Config): Result = {
+    import spark.implicits._
+    runUrlText(spark, pages.select($"url", $"text").as[(String, String)], cfg)
+  }
 
   /** [[run]] over an already-projected (url, text) relation (see
     * [[extractTriplesUrlText]]): identical stages and outputs — the page
@@ -132,36 +134,23 @@ object Pipeline {
     * building the html payload) skips the dead construction work.
     */
   def runUrlText(
-      spark: SparkSession, urlText: Dataset[(String, String)], cfg: Config): Result =
-    runExtracting(spark, cfg, () => extractTriplesUrlText(urlText).toDF())
-
-  private def runExtracting(
-      spark: SparkSession, cfg: Config, extracted: () => DataFrame): Result = {
+      spark: SparkSession, urlText: Dataset[(String, String)], cfg: Config): Result = {
     val metrics = Vector.newBuilder[StageMetrics]
-    def timed[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
-      a
-    }
 
     // ---- Stage A: extraction (snapshot + resume) -------------------------
     val triplesDir = Paths.get(cfg.outDir, "triples").toString
-    val triples = timed("extract") {
-      val df =
-        if (cfg.resume)
-          Snapshot.resumeOrWrite(spark, triplesDir, "triples", Seq("pages")) {
-            extracted()
-          }
-        else extracted()
+    val triples = timed(metrics, "extract") {
+      def extracted = extractTriplesUrlText(urlText).toDF()
       // snapshot-backed runs re-read the snapshot (no second corpus-sized copy)
-      val cache = cfg.cacheTriples.getOrElse(!cfg.resume)
-      val out =
-        if (cache) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df
-      (out, out.count())
+      val df =
+        if (cfg.resume) Snapshot.resumeOrWrite(spark, triplesDir, "triples", Seq("pages"))(extracted)
+        else extracted.persist(StorageLevel.MEMORY_AND_DISK)
+      (df, df.count())
     }
-
-    runFromTriples(spark, triples, cfg, triplesDir, metrics)
+    val (res, hk) =
+      runFromTriples(spark, triples, Registry.community(), cfg, Seq(triplesDir), metrics)
+    TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(res.metrics, hk, Nil))
+    res
   }
 
   /** Chunked Stage A: the page corpus is processed in independent chunks,
@@ -177,14 +166,8 @@ object Pipeline {
       cfg: Config
   ): Result = {
     val metrics = Vector.newBuilder[StageMetrics]
-    def timed[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
-      a
-    }
     val triplesDir = Paths.get(cfg.outDir, "triples").toString
-    val triples = timed("extract") {
+    val triples = timed(metrics, "extract") {
       var computed = 0
       (0 until nChunks).foreach { k =>
         val dir = Paths.get(triplesDir, s"chunk=$k").toString
@@ -195,15 +178,14 @@ object Pipeline {
         }
       }
       // always snapshot-backed here: the chunk parquet is the materialization
-      val read = spark.read.parquet((0 until nChunks).map(k => s"$triplesDir/chunk=$k"): _*)
-      val df =
-        if (cfg.cacheTriples.contains(true))
-          read.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else read
+      val df = spark.read.parquet((0 until nChunks).map(k => s"$triplesDir/chunk=$k"): _*)
       metrics += StageMetrics("chunks_computed", computed.toLong, 0L)
       (df, df.count())
     }
-    runFromTriples(spark, triples, cfg, triplesDir, metrics)
+    val (res, hk) =
+      runFromTriples(spark, triples, Registry.community(), cfg, Seq(triplesDir), metrics)
+    TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(res.metrics, hk, Nil))
+    res
   }
 
   /** Incremental Stage C over a new crawl segment: with the registry FROZEN
@@ -248,49 +230,54 @@ object Pipeline {
     }
   }
 
-  private def runFromTriples(
+  /** Appends one stage record (rows, wall) for the timed block. */
+  private[pipeline] def timed[A](metrics: MetricsBuilder, name: String)(f: => (A, Long)): A = {
+    val t0 = System.nanoTime()
+    val (a, rows) = f
+    metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
+    a
+  }
+
+  /** Stages B-D over a materialized triple table, shared by both pipelines:
+    * inference from `initial`, the fused Stage-C summary, and the sinks
+    * (output.ttl, all-prefixes.json, vis-data.json, used-groups.tsv and the
+    * summary snapshot recorded with `lineage`). The caller appends any stages
+    * of its own and then writes tasks.json from the returned housekeeping.
+    */
+  private[pipeline] def runFromTriples(
       spark: SparkSession,
       triples: DataFrame,
+      initial: Registry,
       cfg: Config,
-      triplesDir: String,
-      metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
-  ): Result = {
-    def timed[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
-      a
-    }
-    // ---- Stage B: registry + inference rounds ----------------------------
-    val (registry, hk, inferredAll) =
-      runInference(triples, Registry.community(), cfg, metrics)
+      lineage: Seq[String],
+      metrics: MetricsBuilder
+  ): (Result, InferHk) = {
+    // ---- Stage B: inference rounds ---------------------------------------
+    val (registry, hk, inferredAll) = runInference(triples, initial, cfg, metrics)
 
     // ---- Stage C: normalize + summarize (one fused job) -------------------
-    val bcFinal = spark.sparkContext.broadcast(registry)
-    val (rows, groups) = timed("summarize") {
-      val (r, g, _, _) = Normalize.summarizeWithGroups(triples, bcFinal, cfg.ignoreUnknown)
+    val bc = spark.sparkContext.broadcast(registry)
+    val (rows, groups) = timed(metrics, "summarize") {
+      val (r, g, _, _) = Normalize.summarizeWithGroups(triples, bc, cfg.ignoreUnknown)
       ((r, g), r.size.toLong)
     }
     val summary = spark.createDataFrame(rows)
       .select(F.col("s_ns"), F.col("p_ns"), F.col("o_ns"), F.col("is_datatype"), F.col("occurs"))
 
     // ---- Stage D: sinks (driver-side; the summary is tiny by construction) -
-    timed("sinks") {
+    timed(metrics, "sinks") {
       TtlSink.write(Paths.get(cfg.outDir, "output.ttl"),
         TtlSink.render(rows, groups, cfg.minOccurs))
       TtlSink.write(Paths.get(cfg.outDir, "all-prefixes.json"), registry.toJson)
-      val visRows = rows.filter(_.occurs >= cfg.minOccurs)
-      val vis = VisJson.build(visRows, groups.toMap)
+      val vis = VisJson.build(rows.filter(_.occurs >= cfg.minOccurs), groups.toMap)
       TtlSink.write(Paths.get(cfg.outDir, "vis-data.json"), VisJson.toJson(vis))
       TtlSink.write(Paths.get(cfg.outDir, "used-groups.tsv"), TtlSink.groupsTsv(groups))
       Snapshot.writeSmall(summary, Paths.get(cfg.outDir, "summary").toString,
-        "summary", Seq(triplesDir), rows.size.toLong)
+        "summary", lineage, rows.size.toLong)
       ((), rows.size.toLong)
     }
 
-    val ms = metrics.result()
-    TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(ms, hk, Nil))
-    Result(summary, registry, triples, ms, inferredAll)
+    (Result(summary, registry, triples, metrics.result(), inferredAll), hk)
   }
 
   /** Stage B: inference rounds to the order-independent fixed point.
@@ -308,11 +295,11 @@ object Pipeline {
       triples: DataFrame,
       initial: Registry,
       cfg: Config,
-      metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
+      metrics: MetricsBuilder
   ): (Registry, InferHk, Vector[String]) = {
     var registry = initial
     val inferredAll = Vector.newBuilder[String]
-    var hk = InferHk(0, 0L, 0L, 0L, 0L)
+    var hk = InferHk(0, 0L, 0L, 0L)
     var unresolved: DataFrame = null // persisted unresolved-IRI relation
     if (cfg.inferNs) {
       var round = 0
@@ -343,7 +330,7 @@ object Pipeline {
                 .filter(Normalize.resolveCol(F.col("iri"), registry).isNull)
               if (round == 1) full
               else {
-                val p = full.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                val p = full.persist(StorageLevel.MEMORY_AND_DISK)
                 unresolved = p
                 p
               }
@@ -351,15 +338,14 @@ object Pipeline {
               val deltaReg = Registry.fromPairs(deltaPairs, NsSource.Inference)
               val next = unresolved
                 .filter(Normalize.resolveCol(F.col("iri"), deltaReg).isNull)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                .persist(StorageLevel.MEMORY_AND_DISK)
               next.count() // materialize before dropping the parent cache
               unresolved.unpersist()
               unresolved = next
               next
             }
-          val (inferred, nGarbage, candidates) = Inference.inferFromIrisWithCandidates(
-            iris, cfg.salt, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs, cfg.countGarbage,
-            cfg.maxCollected)
+          val (inferred, candidates) = Inference.inferFromIrisWithCandidates(
+            iris, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxCollected)
           val (reg2, addedNs) = registry.withNamespaces(inferred)
           registry = reg2
           inferredAll ++= addedNs
@@ -379,8 +365,7 @@ object Pipeline {
             if (addedNs.isEmpty) Inference.sampleUnresolved(iris)
             else hk.exampleUnresolved
           hk = InferHk(hk.rounds + 1, hk.wallMs + (System.nanoTime() - t1) / 1000000,
-            hk.inferredNs + inferred.size, hk.addedNs + addedNs.size,
-            hk.discardedNs + nGarbage, examples)
+            hk.inferredNs + inferred.size, hk.addedNs + addedNs.size, examples)
           val go = addedNs.nonEmpty && !exhausted
           metrics += StageMetrics(s"infer_round_$round", addedNs.size.toLong,
             (System.nanoTime() - t0) / 1000000)
@@ -410,7 +395,7 @@ object Pipeline {
     }.mkString("[\n", ",\n", "\n  ]")
     s"""{
   "stages": ${metricsJson(ms).linesIterator.mkString("\n  ")},
-  "infer_hk": {"rounds": ${hk.rounds}, "wall_ms": ${hk.wallMs}, "inferred_ns": ${hk.inferredNs}, "added_ns": ${hk.addedNs}, "discarded_ns": ${hk.discardedNs}, "example_unresolved": ${hk.exampleUnresolved.map(Registry.jstr).mkString("[", ", ", "]")}},
+  "infer_hk": {"rounds": ${hk.rounds}, "wall_ms": ${hk.wallMs}, "inferred_ns": ${hk.inferredNs}, "added_ns": ${hk.addedNs}, "example_unresolved": ${hk.exampleUnresolved.map(Registry.jstr).mkString("[", ", ", "]")}},
   "files": ${if (files.isEmpty) "[]" else filesJson}
 }"""
   }

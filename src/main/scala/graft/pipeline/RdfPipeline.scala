@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import graft.model.PrefixDecl
-import graft.ns.{NsSource, Registry}
+import graft.ns.Registry
+import graft.pipeline.Pipeline.timed
 import graft.rdf.RdfSource
-import graft.sinks.{TtlSink, VisJson}
-import graft.summarize.Normalize
+import graft.sinks.TtlSink
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import java.nio.file.Paths
 
@@ -17,13 +17,6 @@ import java.nio.file.Paths
   * (Stage 4: output.ttl, all-prefixes.json, vis-data.json, tasks.json).
   */
 object RdfPipeline {
-
-  final case class RdfResult(
-      summary: DataFrame,
-      registry: Registry,
-      triples: DataFrame,
-      metrics: Seq[Pipeline.StageMetrics]
-  )
 
   /** The reference applies the 200-grapheme cap to EVERY parsed IRI
     * (`normalize_iri`, src/prefixes.rs:431-444), so corpora with >200-char
@@ -44,17 +37,11 @@ object RdfPipeline {
       .withColumn("oDt", capped(F.col("oDt")))
   }
 
-  def run(spark: SparkSession, paths: Seq[String], cfg: Pipeline.Config): RdfResult = {
+  def run(spark: SparkSession, paths: Seq[String], cfg: Pipeline.Config): Pipeline.Result = {
     val metrics = Vector.newBuilder[Pipeline.StageMetrics]
-    def timed[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      metrics += Pipeline.StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
-      a
-    }
 
     val (triplesDs, declsDs) = RdfSource.read(spark, paths)
-    val triples = timed("scan") {
+    val triples = timed(metrics, "scan") {
       val df = truncateIris(triplesDs.toDF())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (df, df.count())
@@ -62,41 +49,21 @@ object RdfPipeline {
 
     // registry: community + per-file @prefix decls (alias from file; generated
     // when the file declares the empty alias)
-    var registry = Registry.community()
-    timed("prefix_decls") {
+    val declared = timed(metrics, "prefix_decls") {
       val decls: Array[PrefixDecl] = declsDs.collect()
-      registry = Registry.addDeclaredAll(registry,
-        decls.sortBy(d => (d.ns.length, d.ns)).map(d => d.ns -> d.alias).toSeq)
-      ((), decls.length.toLong)
+      (Registry.addDeclaredAll(Registry.community(),
+        decls.sortBy(d => (d.ns.length, d.ns)).map(d => d.ns -> d.alias).toSeq),
+        decls.length.toLong)
     }
 
-    // inference rounds (chilon Stage 2; shared delta-round loop)
-    val (registry2, hk, _) = Pipeline.runInference(triples, registry, cfg, metrics)
-    registry = registry2
+    // inference rounds (chilon Stage 2), normalize + summarize (Stage 3) and
+    // sinks (Stage 4), shared with the page pipeline
+    val (res, hk) = Pipeline.runFromTriples(spark, triples, declared, cfg, paths, metrics)
 
-    // normalize + summarize (chilon Stage 3, one fused job) + sinks (Stage 4)
-    val bc = spark.sparkContext.broadcast(registry)
-    val (rows, groups) = timed("summarize") {
-      val (r, g, _, _) = Normalize.summarizeWithGroups(triples, bc, cfg.ignoreUnknown)
-      ((r, g), r.size.toLong)
-    }
-    val summary = spark.createDataFrame(rows)
-      .select(F.col("s_ns"), F.col("p_ns"), F.col("o_ns"), F.col("is_datatype"), F.col("occurs"))
-    timed("sinks") {
-      TtlSink.write(Paths.get(cfg.outDir, "output.ttl"),
-        TtlSink.render(rows, groups, cfg.minOccurs))
-      TtlSink.write(Paths.get(cfg.outDir, "all-prefixes.json"), registry.toJson)
-      val vis = VisJson.build(rows.filter(_.occurs >= cfg.minOccurs), groups.toMap)
-      TtlSink.write(Paths.get(cfg.outDir, "vis-data.json"), VisJson.toJson(vis))
-      TtlSink.write(Paths.get(cfg.outDir, "used-groups.tsv"), TtlSink.groupsTsv(groups))
-      graft.sinks.Snapshot.writeSmall(summary, Paths.get(cfg.outDir, "summary").toString,
-        "summary", paths, rows.size.toLong)
-      ((), rows.size.toLong)
-    }
     // per-file metrics (reference Task records, meta_info.rs:31-46): byte
     // size from the filesystem, kind tallies from one aggregation over the
     // triple table grouped by the srcUrl lineage column
-    val files = timed("file_metrics") {
+    val files = timed(metrics, "file_metrics") {
       // srcUrl is the URI the scan stamped (file:/..., possibly file:///...);
       // normalize BOTH sides to an absolute filesystem path and match
       // exactly — suffix matching would misattribute when one input path is
@@ -140,6 +107,6 @@ object RdfPipeline {
     }
     val ms = metrics.result()
     TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), Pipeline.tasksJson(ms, hk, files))
-    RdfResult(summary, registry, triples, ms)
+    res.copy(metrics = ms)
   }
 }

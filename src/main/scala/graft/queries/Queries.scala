@@ -180,7 +180,7 @@ object Queries {
   /** N3: full inference round (aggregate -> collect -> expansion) as a table. */
   def n3InferNs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (inferred, _) = Inference.inferFromIris(inferenceIris(spark, dir))
+    val (inferred, _) = Inference.inferFromIrisWithCandidates(inferenceIris(spark, dir))
     inferred.map { case (ns, size, _) => (ns, size) }
       .toDF("ns", "size").orderBy("ns")
   }
@@ -1221,7 +1221,8 @@ object Queries {
     // the inference rounds. The old Pipeline.run also ran the batch
     // summarize and all four sinks — outputs this query never reads.
     val reg = {
-      val cfg = graft.pipeline.Pipeline.Config(outDir = stage, minOccurs = 5,
+      val out = java.nio.file.Files.createTempDirectory("graft-stream-reg").toString
+      val cfg = graft.pipeline.Pipeline.Config(outDir = out, minOccurs = 5,
         minNsSize = 100, minDomainOccurs = 10, resume = false)
       val triples = graft.pipeline.Pipeline
         .extractTriples(spark.read.parquet(stage).as[graft.model.Page]).toDF()

@@ -142,8 +142,9 @@ object Normalize {
       .withColumn("stmt_id", F.format_string("#t%04d", F.row_number().over(w)))
   }
 
-  /** Fused Stage-C aggregation: summary rows, used groups and blank/unknown
-    * flags from ONE distributed job (scale path — avoids caching the wide
+  /** Fused Stage-C aggregation: summary rows, used (alias, ns) groups and
+    * blank/unknown flags (reference `Groups`, `src/normalize.rs:140-151,316-361`)
+    * from ONE distributed job (scale path — avoids caching the wide
     * normalized table and re-scanning it three times). The pre-aggregation
     * keys include the (alias, ns) pair structs; their cardinality is the same
     * order as the summary itself (a key determines its pair except for the two
@@ -178,28 +179,5 @@ object Normalize {
       .map { case ((s, p, o, dt), n) => graft.model.SummaryRow(s, p, o, dt, n) }
       .sortBy(r => (r.s_ns, r.p_ns, r.o_ns, r.is_datatype))
     (summaryRows, groups.toSeq, blank, unknown)
-  }
-
-  /** Distinct (alias, ns) groups actually used + blank/unknown flags
-    * (reference `Groups`, `src/normalize.rs:140-151,316-361`).
-    */
-  def usedGroups(normalized: DataFrame): (Seq[(String, String)], Boolean, Boolean) = {
-    val pairs = normalized
-      .select(F.explode(F.array(F.col("s_pair"), F.col("p_pair"), F.col("o_pair"))).as("g"))
-      .filter(F.col("g.alias").isNotNull)
-      .select("g.alias", "g.ns")
-      .distinct()
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .sorted
-      .toSeq
-    val flags = normalized
-      .agg(
-        F.max(F.col("s_ns") === Blank || F.col("o_ns") === Blank).as("blank"),
-        F.max(F.col("s_ns") === Unknown || F.col("p_ns") === Unknown || F.col("o_ns") === Unknown)
-          .as("unknown")
-      )
-      .collect()(0)
-    (pairs, Option(flags.get(0)).exists(_ == true), Option(flags.get(1)).exists(_ == true))
   }
 }

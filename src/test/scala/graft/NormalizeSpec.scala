@@ -66,22 +66,23 @@ class NormalizeSpec extends AnyFunSuite {
     assert(all.count() == 2)
   }
 
-  test("summarize counts signatures; usedGroups collects aliases and flags") {
+  test("summarize counts signatures; summarizeWithGroups collects aliases and flags") {
     val bc = spark.sparkContext.broadcast(Registry.community())
     val ts = Seq(
       Triple(ex, Kind.IRI, pred, "lit", Kind.LIT_PLAIN, None, None, "u"),
       Triple(ex, Kind.IRI, pred, "lit2", Kind.LIT_PLAIN, None, None, "u"),
       Triple("b0", Kind.BLANK, pred, "http://unreg.invalid/x", Kind.IRI, None, None, "u")
     )
-    val norm = Normalize.normalize(ts.toDS().toDF(), bc)
-    val sum = Normalize.summarize(norm).collect()
+    val df = ts.toDS().toDF()
+    val sum = Normalize.summarize(Normalize.normalize(df, bc)).collect()
     val asMap = sum.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getBoolean(3)) -> r.getLong(4)).toMap
     assert(asMap(("example", "example", "xsd", true)) == 2)
     assert(asMap(("BLANK", "example", "UNKNOWN", false)) == 1)
-    val (groups, blank, unknown) = Normalize.usedGroups(norm)
+    val (rows, groups, blank, unknown) = Normalize.summarizeWithGroups(df, bc)
+    // the fused job counts exactly what the plain group-count does
+    assert(rows.map(r => (r.s_ns, r.p_ns, r.o_ns, r.is_datatype) -> r.occurs).toMap == asMap)
     assert(blank && unknown)
-    assert(groups.contains(("example", "http://example.org/")))
-    assert(groups.contains(("xsd", "http://www.w3.org/TR/xmlschema11-2/")))
+    assert(groups == Seq(("example", "http://example.org/"), ("xsd", "http://www.w3.org/TR/xmlschema11-2/")))
   }
 
   test("summary counts are permutation/partitioning-invariant (SURVEY §5.2-4b)") {

@@ -65,6 +65,11 @@ class RdfPipelineSpec extends AnyFunSuite {
     assert(tasks.contains("\"triples\": 30")) // decl.ttl tally
     assert(tasks.contains("\"triples\": 503")) // data.nt tally
     assert("\"stage\": \"infer_round_1\"".r.findFirstIn(tasks).isDefined)
+    // the exact stage order tasks.json readers key on
+    val rounds = res.metrics.count(_.name.startsWith("infer_round_"))
+    assert(rounds >= 1)
+    assert(res.metrics.map(_.name) == Seq("scan", "prefix_decls") ++
+      (1 to rounds).map(i => s"infer_round_$i") ++ Seq("summarize", "sinks", "file_metrics"))
 
     // a DIRECTORY input expands to its contained files in tasks.json (the
     // tally keys are file paths; a directory row would report silent zeros)
